@@ -114,7 +114,7 @@ object Bench {
     // move absolute seconds without tripping the relative spike rule.
     val midThresh = sys.env.getOrElse("SPARK_GRAFT_BENCH_MID_THRESH", "3.0").toDouble
     val expect = loadExpect(sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_EXPECT", "/root/repo/docs/BENCH_EXPECT.json"))
+      "SPARK_GRAFT_BENCH_EXPECT", "docs/BENCH_EXPECT.json"))
     val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     // ERROR, not WARN: at 313 queries a benign per-plan warning class
     // (e.g. the r9 LogicalRDD attribute-name spam) floods the driver's
@@ -227,7 +227,7 @@ object Bench {
     val jitStatsPath: Option[String] = sys.env.get("SPARK_GRAFT_BENCH_JITSTATS")
       .orElse(Some("1"))
       .filter(v => v.nonEmpty && v != "0")
-      .map(v => if (v == "1") "/root/repo/jitstats.jsonl" else v)
+      .map(v => if (v == "1") "jitstats.jsonl" else v)
     val tally = jitStatsPath.map { _ =>
       val t = new BenchRules.TaskTally
       spark.sparkContext.addSparkListener(t)
@@ -325,7 +325,7 @@ object Bench {
     val rerunWallSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RERUN_WALL", "2050").toDouble
     val priorDriver = BenchRules.loadPriorDriver(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_records.jsonl"))
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_records.jsonl"))
     val spiked = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val reran = scala.collection.mutable.ArrayBuffer.empty[String]
     val adjudicated: Seq[(String, Double)] = {
@@ -386,7 +386,7 @@ object Bench {
     )
     val sha =
       try {
-        val p = new ProcessBuilder("git", "-C", "/root/repo", "rev-parse", "--short", "HEAD").start()
+        val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD").start()
         val s0 = new String(p.getInputStream.readAllBytes()).trim
         p.waitFor()
         if (s0.nonEmpty) s0 else "unknown"
@@ -398,13 +398,13 @@ object Bench {
       def progressRound: Option[Int] =
         try {
           val last = java.nio.file.Files
-            .readString(java.nio.file.Paths.get("/root/repo/PROGRESS.jsonl"))
+            .readString(java.nio.file.Paths.get("PROGRESS.jsonl"))
             .linesIterator.filter(_.nonEmpty).toSeq.lastOption
           last.flatMap("\"round\": *(\\d+)".r.findFirstMatchIn(_)).map(_.group(1).toInt)
         } catch { case _: Throwable => None }
       def verdictRound: Option[Int] =
         try {
-          val head = java.nio.file.Files.readString(java.nio.file.Paths.get("/root/repo/VERDICT.md"))
+          val head = java.nio.file.Files.readString(java.nio.file.Paths.get("VERDICT.md"))
             .linesIterator.take(1).mkString
           "round (\\d+)".r.findFirstMatchIn(head).map(_.group(1).toInt + 1)
         } catch { case _: Throwable => None }
@@ -433,7 +433,7 @@ object Bench {
     // ALSO persist the full record to a file: the driver's captured
     // stdout tail truncates past ~64 per-query medians; the file is
     // what docs/BENCH_NOTES.md bands are re-derived from.
-    val recPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_records.jsonl")
+    val recPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_records.jsonl")
     try {
       val w = new java.io.FileWriter(recPath, true)
       try w.write(line + "\n") finally w.close()

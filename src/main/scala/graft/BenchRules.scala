@@ -67,16 +67,20 @@ object BenchRules {
       driverHistorySpike(value, priorDriver, crossK, abs)
 
   /** Per-query values of the most recent FULL DRIVER record in
-    * `bench_records.jsonl` (source=="driver", subset:false, nq ≥ 100),
-    * excluding names degraded-without-rerun in that record (wall-guard
-    * one-shots under load are not settled values to compare against).
-    * Same no-JSON-dependency regex discipline as Bench.loadExpect: the
-    * record line is machine-written by Bench itself, so the shapes are
-    * exact. Missing/unreadable file or no driver record → empty map →
-    * the r14 trigger simply never fires (the safe default — the r12
-    * trigger still guards).
+    * `bench_records.jsonl` (source=="driver", subset:false, nq ≥ 100)
+    * taken at this run's core count (`"nproc"` == `nproc`), excluding
+    * names degraded-without-rerun in that record (wall-guard one-shots
+    * under load are not settled values to compare against). Records of
+    * another width, or without an `nproc` field, never bind: shuffle
+    * width tracks cores, so a 32-core record would flag about half of a
+    * 4-core run as spikes. Same no-JSON-dependency regex discipline as
+    * Bench.loadExpect: the record line is machine-written by Bench
+    * itself, so the shapes are exact. Missing/unreadable file or no
+    * matching record → empty map → the r14 trigger simply never fires
+    * (the safe default — the r12 trigger still guards).
     */
-  def loadPriorDriver(path: String): Map[String, Double] =
+  def loadPriorDriver(path: String,
+                      nproc: Int = Runtime.getRuntime.availableProcessors()): Map[String, Double] =
     try {
       val lines = java.nio.file.Files
         .readString(java.nio.file.Paths.get(path))
@@ -84,6 +88,7 @@ object BenchRules {
       val driverLines = lines.filter { l =>
         l.contains("\"source\":\"driver\"") &&
           l.contains("\"subset\":false") &&
+          "\"nproc\":(\\d+)".r.findFirstMatchIn(l).exists(_.group(1).toInt == nproc) &&
           "\"nq\":(\\d+)".r.findFirstMatchIn(l).exists(_.group(1).toInt >= 100)
       }
       driverLines.lastOption.map(parseRecordQueries).getOrElse(Map.empty)

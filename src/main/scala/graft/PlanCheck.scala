@@ -105,11 +105,10 @@ object PlanCheck {
     */
   private def fingerprints(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    // absolute default (the Bench.scala record-path lesson): run under a
-    // harness whose working directory is its own, a relative path lands
-    // the file outside the repo checkout or throws NoSuchFileException
+    // relative to the working directory: sbt forks runMain in the
+    // checkout's base directory, so a run writes into its own checkout
     val out = if (args.length > 1) args(1)
-      else sys.env.getOrElse("SPARK_GRAFT_FP_OUT", "/root/repo/docs/PLAN_FINGERPRINTS.json")
+      else sys.env.getOrElse("SPARK_GRAFT_FP_OUT", "docs/PLAN_FINGERPRINTS.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = Sessions
       .builder(s"local[$cpus]", cpus)
@@ -154,7 +153,7 @@ object PlanCheck {
           // container — token unidentifiable from hashes alone). The
           // committed dumps make the next cross-round comparison a TEXT
           // diff that names the leaking token instead of a hash verdict.
-          val dumpDir = sys.env.getOrElse("SPARK_GRAFT_FP_DUMP", "/root/repo/docs/plan_dumps")
+          val dumpDir = sys.env.getOrElse("SPARK_GRAFT_FP_DUMP", "docs/plan_dumps")
           java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dumpDir))
           java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dumpDir/$name.txt"), norm)
           java.security.MessageDigest

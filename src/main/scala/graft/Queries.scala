@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
 
-/** The operator-inventory query registry (SURVEY.md §2 → SparkEntry).
+/** The operator-inventory query registry (SURVEY.md §2 → SparkEntry):
+  * each family trait declares its queries once, in a `Seq[Query]` at
+  * its end, and SparkEntry derives every name-keyed view from them.
   *
   * Conventions:
   *  - every query takes (spark, sfDir) and reads only Tables.* parquet;
@@ -18,4 +20,3 @@ object Queries extends QueriesCore
   with QueriesExact
   with QueriesGraph
   with QueriesJdbc
-  with QueriesRegistry

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.Oracle.Sql
 
 /** windows, certificates, OLAP analytics
   *
@@ -4521,4 +4522,70 @@ private[graft] trait QueriesAnalytics {
       |  (SELECT CAST(SUM(d_to_int) AS BIGINT) FROM dc) AS sum_dbl_int,
       |  (SELECT CAST(SUM(d_to_long) AS BIGINT) FROM dc) AS sum_dbl_long""".stripMargin
 
+  // ------------------------------------------------------------ registry
+  /** The queries this family defines. Lazy: an oracle val declared later
+    * in the linearization would be captured as null by a strict val. */
+  lazy val analyticsQueries: Seq[Query] = Seq(
+    Query("q149_image_dhash", q149ImageDhash, Sql(q149Oracle)),
+    Query("q150_rendezvous_shards", q150RendezvousShards, Sql(q150Oracle)),
+    Query("q151_reshard_plan", q151ReshardPlan, Sql(q151Oracle)),
+    Query("q152_span_width_ladder", q152SpanWidthLadder, Sql(q152Oracle)),
+    Query("q153_source_fair_filter", q153SourceFairFilter, Sql(q153Oracle)),
+    Query("q154_epoch_plan", q154EpochPlan, Sql(q154Oracle)),
+    Query("q155_label_prop", q155LabelProp, Sql(q155Oracle), core = true),
+    Query("q156_epoch_drift", q156EpochDrift, Sql(q156Oracle)),
+    Query("q157_range_join", q157RangeJoin, Sql(q157Oracle), core = true),
+    Query("q158_retention", q158Retention, Sql(q158Oracle)),
+    Query("q159_pivot", q159Pivot, Sql(q159Oracle)),
+    Query("q160_fuzzy_match", q160FuzzyMatch, Sql(q160Oracle)),
+    Query("q161_rollup", q161Rollup, Sql(q161Oracle)),
+    Query("q162_six_way_join", q162SixWayJoin, Sql(q162Oracle)),
+    Query("q163_exists_late", q163ExistsLate, Sql(q163Oracle)),
+    Query("q164_scalar_avg", q164ScalarAvg, Sql(q164Oracle)),
+    Query("q165_not_in_nulls", q165NotInNulls, Sql(q165Oracle)),
+    Query("q166_null_safe_join", q166NullSafeJoin, Sql(q166Oracle)),
+    Query("q167_peak_concurrency", q167PeakConcurrency, Sql(q167Oracle), core = true),
+    Query("q168_skyline", q168Skyline, Sql(q168Oracle)),
+    Query("q169_entity_resolution", q169EntityResolution, Sql(q169Oracle), core = true),
+    Query("q170_exact_moments", q170ExactMoments, Sql(q170Oracle)),
+    Query("q171_window_functions", q171WindowFunctions, Sql(q171Oracle), core = true),
+    Query("q172_grouping_sets", q172GroupingSets, Sql(q172Oracle)),
+    Query("q173_video_keyframes", q173VideoKeyframes, Sql(q173Oracle), core = true),
+    Query("q174_triangles", q174Triangles, Sql(q174Oracle), core = true),
+    Query("q175_sole_late_supplier", q175SoleLateSupplier, Sql(q175Oracle)),
+    Query("q176_global_avg_anti", q176GlobalAvgAnti, Sql(q176Oracle)),
+    Query("q177_set_ops", q177SetOps, Sql(q177Oracle)),
+    Query("q178_explode_outer", q178ExplodeOuter, Sql(q178Oracle)),
+    Query("q179_array_hof", q179ArrayHof, Sql(q179Oracle)),
+    Query("q180_ivm", q180Ivm, Sql(q180Oracle), core = true),
+    Query("q181_attribution", q181Attribution, Sql(q181Oracle)),
+    Query("q182_twap", q182Twap, Sql(q182Oracle)),
+    Query("q183_ohlc", q183Ohlc, Sql(q183Oracle)),
+    Query("q184_kcore", q184KCore, Sql(q184Oracle), core = true),
+    Query("q185_trending", q185Trending, Sql(q185Oracle)),
+    Query("q186_ratio_report", q186RatioReport, Sql(q186Oracle)),
+    Query("q187_moving_median", q187MovingMedian, Sql(q187Oracle)),
+    Query("q189_weighted_median", q189WeightedMedian, Sql(q189Oracle)),
+    Query("q190_journey_patterns", q190JourneyPatterns, Sql(q190Oracle)),
+    Query("q191_clamped_balance", q191ClampedBalance, Sql(q191Oracle)),
+    Query("q192_mergeable_distinct", q192MergeableDistinct, Sql(q192Oracle)),
+    Query("q193_time_to_convert", q193TimeToConvert, Sql(q193Oracle)),
+    Query("q194_rfm", q194Rfm, Sql(q194Oracle)),
+    Query("q195_fifo", q195Fifo, Sql(q195Oracle)),
+    Query("q196_iso_weekday", q196IsoWeekday, Sql(q196Oracle)),
+    Query("q197_unicode", q197Unicode, Sql(q197Oracle)),
+    Query("q198_int_division", q198IntDivision, Sql(q198Oracle)),
+    Query("q199_log_histogram", q199LogHistogram, Sql(q199Oracle)),
+    Query("q200_daily_dashboard", q200DailyDashboard, Sql(q200Oracle)),
+    Query("q201_geo_grid", q201GeoGrid, Sql(q201Oracle), core = true),
+    Query("q202_spatial_join", q202SpatialJoin, Sql(q202Oracle)),
+    Query("q204_spatial_knn", q204SpatialKnn, Sql(q204Oracle)),
+    Query("q205_late_arrivals", q205LateArrivals, Sql(q205Oracle)),
+    Query("q206_dedup_idempotence", q206DedupIdempotence, Sql(q206Oracle)),
+    Query("q208_zorder_effect", q208ZorderEffect, Sql(q208Oracle)),
+    Query("q209_null_aggregates", q209NullAggregates, Sql(q209Oracle)),
+    Query("q210_null_ordering", q210NullOrdering, Sql(q210Oracle)),
+    Query("q211_join_matrix", q211JoinMatrix, Sql(q211Oracle)),
+    Query("q212_cast_table", q212CastTable, Sql(q212Oracle))
+  )
 }

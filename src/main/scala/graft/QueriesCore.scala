@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.Oracle.{Generated, Sql}
 
 /** core relational pipeline, dedup, text & ANN foundations
   *
@@ -920,6 +921,35 @@ private[graft] trait QueriesCore {
       .orderBy(col("query_id"), col("rank"))
   }
 
+  /** q30 replay at corpus size `n`: same adaptive geometry, banding,
+    * radius-1 multiprobe on the query side, candidate dedup, and
+    * rounded-cosine ranking as Similarity.annTopK. */
+  def q30OracleFor(n: Long): String = {
+    val (nbits, tables) = Similarity.lshParams(n, targetCosine = 0.4, probeHamming = 1)
+    s"""WITH dbk AS (
+       |${LshSql.dbk(nbits, tables)}
+       |), qpb AS (
+       |  SELECT vec_id AS query_id, tbl, unnest([${LshSql.probeList(nbits)}]) AS bucket
+       |  FROM dbk WHERE vec_id < 10
+       |), cand AS (
+       |  SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id
+       |  FROM dbk c JOIN qpb q ON c.tbl = q.tbl AND c.bucket = q.bucket
+       |  WHERE c.vec_id <> q.query_id
+       |)
+       |SELECT query_id, rank, neighbor_id, sim FROM (
+       |  SELECT cand.query_id, cand.neighbor_id,
+       |    round(list_cosine_similarity(c.embedding::DOUBLE[], q.embedding::DOUBLE[]), 4) AS sim,
+       |    ROW_NUMBER() OVER (
+       |      PARTITION BY cand.query_id
+       |      ORDER BY round(list_cosine_similarity(c.embedding::DOUBLE[], q.embedding::DOUBLE[]), 4) DESC,
+       |               cand.neighbor_id) AS rank
+       |  FROM cand
+       |  JOIN embeddings c ON cand.neighbor_id = c.vec_id
+       |  JOIN embeddings q ON cand.query_id = q.vec_id
+       |) WHERE rank <= 5
+       |ORDER BY query_id, rank""".stripMargin
+  }
+
   // ---------------------------------------------------------------- q31
   /** Embedding near-duplicate pairs at cosine ≥ 0.35 via shared LSH
     * buckets (the exact baseline is q45, against which recall is
@@ -946,6 +976,29 @@ private[graft] trait QueriesCore {
         e.repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("vec_id")),
         threshold = 0.35, nbits = nbits, tables = tables, probes = 1)
       .orderBy(col("id_a"), col("id_b"))
+  }
+
+  /** q31 replay at corpus size `n`: one-side radius-1 multiprobe bucket
+    * self-join, candidate dedup, rounded-cosine threshold — exactly
+    * Similarity.nearDupsEmbedding's pipeline. */
+  def q31OracleFor(n: Long): String = {
+    val (nbits, tables) = Similarity.lshParams(n, targetCosine = 0.35, probeHamming = 1)
+    s"""WITH dbk AS (
+       |${LshSql.dbk(nbits, tables)}
+       |), pa AS (
+       |  SELECT vec_id AS id_a, tbl, unnest([${LshSql.probeList(nbits)}]) AS bucket FROM dbk
+       |), cand AS (
+       |  SELECT DISTINCT a.id_a, b.vec_id AS id_b
+       |  FROM pa a JOIN dbk b ON a.tbl = b.tbl AND a.bucket = b.bucket
+       |  WHERE a.id_a < b.vec_id
+       |)
+       |SELECT cand.id_a, cand.id_b,
+       |  round(list_cosine_similarity(va.embedding::DOUBLE[], vb.embedding::DOUBLE[]), 4) AS sim
+       |FROM cand
+       |JOIN embeddings va ON cand.id_a = va.vec_id
+       |JOIN embeddings vb ON cand.id_b = vb.vec_id
+       |WHERE round(list_cosine_similarity(va.embedding::DOUBLE[], vb.embedding::DOUBLE[]), 4) >= 0.35
+       |ORDER BY id_a, id_b""".stripMargin
   }
 
   // ---------------------------------------------------------------- q45
@@ -1795,6 +1848,50 @@ private[graft] trait QueriesCore {
         col("n_found"),
         col("recall")
       )
+  }
+
+  /** q49 replay at corpus size `n`: q30's candidate/ranking replay plus
+    * the exact brute-force side and the recallAudit arithmetic. */
+  def q49OracleFor(n: Long): String = {
+    val (nbits, tables) = Similarity.lshParams(n, targetCosine = 0.4, probeHamming = 1)
+    s"""WITH dbk AS (
+       |${LshSql.dbk(nbits, tables)}
+       |), qpb AS (
+       |  SELECT vec_id AS query_id, tbl, unnest([${LshSql.probeList(nbits)}]) AS bucket
+       |  FROM dbk WHERE vec_id < 10
+       |), cand AS (
+       |  SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id
+       |  FROM dbk c JOIN qpb q ON c.tbl = q.tbl AND c.bucket = q.bucket
+       |  WHERE c.vec_id <> q.query_id
+       |), ar AS (
+       |  SELECT query_id, neighbor_id FROM (
+       |    SELECT cand.query_id, cand.neighbor_id,
+       |      ROW_NUMBER() OVER (
+       |        PARTITION BY cand.query_id
+       |        ORDER BY round(list_cosine_similarity(c.embedding::DOUBLE[], q.embedding::DOUBLE[]), 4) DESC,
+       |                 cand.neighbor_id) AS rank
+       |    FROM cand
+       |    JOIN embeddings c ON cand.neighbor_id = c.vec_id
+       |    JOIN embeddings q ON cand.query_id = q.vec_id
+       |  ) WHERE rank <= 5
+       |), ex AS (
+       |  SELECT query_id, neighbor_id FROM (
+       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |      ROW_NUMBER() OVER (
+       |        PARTITION BY q.vec_id
+       |        ORDER BY round(list_cosine_similarity(c.embedding::DOUBLE[], q.embedding::DOUBLE[]), 4) DESC,
+       |                 c.vec_id) AS rank
+       |    FROM embeddings c, embeddings q
+       |    WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id
+       |  ) WHERE rank <= 5
+       |)
+       |SELECT CAST($n AS BIGINT) AS n_vectors, $nbits AS nbits, $tables AS tables,
+       |  CAST(count(*) AS BIGINT) AS n_exact,
+       |  CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_found,
+       |  round(CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) /
+       |        CAST(count(*) AS DOUBLE), 4) AS recall
+       |FROM ex LEFT JOIN (SELECT DISTINCT query_id, neighbor_id FROM ar) a
+       |  USING (query_id, neighbor_id)""".stripMargin
   }
 
   // ---------------------------------------------------------------- q47
@@ -4452,4 +4549,102 @@ private[graft] trait QueriesCore {
       |FROM d LEFT JOIN cl USING (doc_id)
       |ORDER BY d.doc_id""".stripMargin
 
+  // ------------------------------------------------------------ registry
+  /** The queries this family defines. Lazy: an oracle val declared later
+    * in the linearization would be captured as null by a strict val. */
+  lazy val coreQueries: Seq[Query] = Seq(
+    Query("q1_agg", q1Agg, Sql(q1Oracle)),
+    Query("q2_filter", q2Filter, Sql(q2Oracle), core = true),
+    Query("q3_enrich", q3Enrich, Sql(q3Oracle), core = true),
+    Query("q4_watermark", q4Watermark, Sql(q4Oracle), core = true),
+    Query("q5_dedup", q5Dedup, Sql(q5Oracle), core = true),
+    Query("q6_latest", q6Latest, Sql(q6Oracle)),
+    Query("q7_hourly", q7Hourly, Sql(q7Oracle), core = true),
+    Query("q8_union", q8Union, Sql(q8Oracle), core = true),
+    Query("q9_topk", q9Topk, Sql(q9Oracle), core = true),
+    Query("q10_upsert", q10Upsert, Sql(q10Oracle), core = true),
+    Query("q11_greatest", q11Greatest, Sql(q11Oracle)),
+    Query("q12_json", q12Json, Sql(q12Oracle), core = true),
+    Query("q13_explode", q13Explode, Sql(q13Oracle), core = true),
+    Query("q14_timestamps", q14Timestamps, Sql(q14Oracle)),
+    Query("q15_strings", q15Strings, Sql(q15Oracle)),
+    Query("q16_join_parts", q16JoinParts, Sql(q16Oracle)),
+    Query("q17_count_by", q17CountBy, Sql(q17Oracle)),
+    Query("q18_parse_ts", q18ParseTs, Sql(q18Oracle)),
+    Query("q19_normalize", q19Normalize, Sql(q19Oracle), core = true),
+    Query("q20_stations", q20Stations, Sql(q20Oracle), core = true),
+    Query("q21_text_quality", q21TextQuality, Sql(q21Oracle)),
+    Query("q22_lang_id", q22LangId, Sql(q22Oracle)),
+    Query("q23_fingerprint", q23Fingerprint, Sql(q23Oracle)),
+    Query("q24_dedup_text", q24DedupText, Sql(q24Oracle)),
+    Query("q25_knn_brute", q25KnnBrute, Sql(q25Oracle)),
+    Query("q26_token_counts", q26TokenCounts, Sql(q26Oracle)),
+    Query("q27_minhash_dedup", q27MinhashDedup, Generated(c => q27OracleFor(c.spark, c.dir)), core = true),
+    Query("q28_simhash", q28Simhash, Generated(c => q28OracleFor(c.spark, c.dir))),
+    Query("q29_ngram_jaccard", q29NgramJaccard, Sql(q29Oracle)),
+    Query("q30_ann_lsh", q30AnnLsh, Generated(c => q30OracleFor(c.embeddingCount)), core = true),
+    Query("q31_embed_neardups", q31EmbedNearDups, Generated(c => q31OracleFor(c.embeddingCount))),
+    Query("q32_multimodal", q32Multimodal, Sql(q32Oracle), core = true),
+    Query("q33_dedup_assign", q33DedupAssign, Generated(c => q33OracleFor(c.spark, c.dir))),
+    Query("q34_retention", q34Retention, Sql(q34Oracle)),
+    Query("q35_ivf", q35Ivf, Sql(q35Oracle), core = true),
+    Query("q36_rollup", q36Rollup, Sql(q36Oracle)),
+    Query("q37_sessionize", q37Sessionize, Sql(q37Oracle), core = true),
+    Query("q38_pivot", q38Pivot, Sql(q38Oracle)),
+    Query("q39_session_window", q39SessionWindow, Sql(q39Oracle)),
+    Query("q40_topk_per_group", q40TopkPerGroup, Sql(q40Oracle)),
+    Query("q41_percentiles", q41Percentiles, Sql(q41Oracle)),
+    Query("q42_asof_join", q42AsofJoin, Sql(q42Oracle), core = true),
+    Query("q43_range_join", q43RangeJoin, Sql(q43Oracle)),
+    Query("q44_hll_sketch", q44HllSketch, Generated(c => q44OracleFor(c.spark, c.dir)), core = true),
+    Query("q45_embed_neardups_exact", q45EmbedNearDupsExact, Sql(q45Oracle)),
+    Query("q46_text_neardups_exact", q46TextNearDupsExact, Sql(q46Oracle)),
+    Query("q47_tz", q47Tz, Sql(q47Oracle)),
+    Query("q48_minhash_recall", q48MinhashRecall, Generated(c => q48OracleFor(c.spark, c.dir))),
+    Query("q49_ann_adaptive", q49AnnAdaptiveRecall, Generated(c => q49OracleFor(c.embeddingCount)), core = true),
+    Query("q50_bloom_join", q50BloomJoin, Sql(q50Oracle), core = true),
+    Query("q51_connected_components", q51ConnectedComponents, Sql(q51Oracle)),
+    Query("q52_stratified_sample", q52StratifiedSample, Sql(q52Oracle)),
+    Query("q53_text_clean", q53TextClean, Sql(q53Oracle)),
+    Query("q54_media_dedup", q54MediaDedup, Generated(c => q54OracleFor(c.spark, c.dir))),
+    Query("q55_scd2", q55Scd2, Sql(q55Oracle)),
+    Query("q56_dq_checks", q56DqChecks, Sql(q56Oracle)),
+    Query("q57_seq_pack", q57SeqPack, Sql(q57Oracle)),
+    Query("q58_repetition", q58Repetition, Sql(q58Oracle)),
+    Query("q59_tdigest", q59TdigestPercentiles, Sql(q59Oracle), core = true),
+    // q60 runs a different algorithm to the same answer — q51's oracle
+    Query("q60_cc_log_rounds", q60ConnectedComponentsLogRounds, Sql(q51Oracle), core = true),
+    Query("q61_decontaminate", q61Decontaminate, Sql(q61Oracle), core = true),
+    Query("q62_mixture_weights", q62MixtureWeights, Sql(q62Oracle)),
+    Query("q63_chunking", q63Chunk, Sql(q63Oracle)),
+    // q64 is q61 with a Bloom-prefiltered probe — identical output
+    Query("q64_decontaminate_bloom", q64DecontaminateBloom, Sql(q61Oracle)),
+    Query("q65_salted_join", q65SaltedJoin, Sql(q65Oracle), core = true),
+    Query("q66_tfidf", q66Tfidf, Sql(q66Oracle)),
+    Query("q67_clean_pipeline", q67CleanPipeline, Sql(q67Oracle)),
+    Query("q68_source_dedup_stats", q68SourceDedupStats, Sql(q68Oracle)),
+    Query("q69_cube", q69Cube, Sql(q69Oracle)),
+    // q70's k=64 exceeds the corpus vocabulary, so the MG estimates are
+    // provably exact — a plain GROUP BY count is a valid oracle
+    Query("q70_heavy_hitters", q70HeavyHitters, Sql(q70Oracle)),
+    Query("q71_mixture_expand", q71MixtureExpand, Sql(q71Oracle)),
+    Query("q72_incremental_dedup", q72IncrementalDedup, Sql(q72Oracle)),
+    Query("q73_compress_quality", q73CompressQuality, Sql(q73Oracle)),
+    Query("q74_cdc_apply", q74CdcApply, Sql(q74Oracle)),
+    Query("q75_bpe_pairs", q75BpePairs, Sql(q75Oracle)),
+    Query("q76_moving_features", q76MovingFeatures, Sql(q76Oracle)),
+    Query("q77_quantize", q77Quantize, Sql(q77Oracle)),
+    Query("q78_semantic_dedup", q78SemanticDedup, Sql(q78Oracle), core = true),
+    Query("q79_alpha_sweep", q79AlphaSweep, Sql(q79Oracle)),
+    Query("q80_dup_spans", q80DupSpans, Sql(q80Oracle), core = true),
+    Query("q81_quality_auc", q81QualityAuc, Sql(q81Oracle)),
+    Query("q82_source_overlap", q82SourceOverlap, Sql(q82Oracle)),
+    Query("q83_quality_bins", q83QualityBins, Sql(q83Oracle)),
+    Query("q84_canonical_pick", q84CanonicalPick, Sql(q84Oracle)),
+    Query("q85_hash_split", q85HashSplit, Sql(q85Oracle), core = true),
+    Query("q86_oov_rate", q86OovRate, Sql(q86Oracle)),
+    Query("q87_dup_span_removal", q87DupSpanRemoval, Sql(q87Oracle)),
+    Query("q108_audio_decode", q108AudioDecode, Sql(q108Oracle)),
+    Query("q110_lm_score", q110LmScore, Sql(q110Oracle), core = true)
+  )
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.Oracle.{Generated, Sql}
 
 /** corpus curation, export/shard planning, profiling
   *
@@ -3627,7 +3628,7 @@ private[graft] trait QueriesCuration {
     * the exact top-1, mean NDCG@k) is a driver-certified hash match.
     * Round 5 extended the same replay to the ADAPTIVE-geometry queries
     * (q30/q31/q107) by generating their SQL at Verify time from the
-    * corpus count — see [[dynamicOracles]].
+    * corpus count — see [[Oracle.Generated]].
     */
   /** Shared constants of q103's ranking-quality arithmetic, used by BOTH
     * the Spark side and the generated oracle: per-rank DCG weights
@@ -4590,4 +4591,65 @@ private[graft] trait QueriesCuration {
       |  CAST(SUM(cchars) AS BIGINT) AS chunk_chars
       |FROM ch GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
+  // ------------------------------------------------------------ registry
+  /** The queries this family defines. Lazy: an oracle val declared later
+    * in the linearization would be captured as null by a strict val. */
+  lazy val curationQueries: Seq[Query] = Seq(
+    Query("q88_dispersion", q88Dispersion, Sql(q88Oracle)),
+    Query("q89_zorder_layout", q89ZorderLayout, Sql(q89Oracle)),
+    Query("q90_compaction_plan", q90CompactionPlan, Sql(q90Oracle)),
+    Query("q91_hard_negatives", q91HardNegatives, Sql(q91Oracle)),
+    Query("q92_freshness", q92Freshness, Sql(q92Oracle)),
+    Query("q93_funnel", q93Funnel, Sql(q93Oracle)),
+    Query("q94_pq_adc", q94PqAdc, Generated(c => q94OracleFor(c.spark, c.dir)), core = true),
+    Query("q95_bpe_train", q95BpeTrain, Sql(q95Oracle), core = true),
+    Query("q97_anomaly", q97Anomaly, Sql(q97Oracle)),
+    Query("q98_transitions", q98Transitions, Sql(q98Oracle)),
+    Query("q99_nearest_centroid", q99NearestCentroid, Sql(q99Oracle)),
+    Query("q100_data_card", q100DataCard, Sql(q100Oracle)),
+    Query("q101_novelty", q101Novelty, Sql(q101Oracle)),
+    Query("q102_psi_drift", q102PsiDrift, Sql(q102Oracle)),
+    Query("q103_ann_ranking", q103AnnRankingQuality, Sql(q103Oracle), core = true),
+    Query("q104_snapshot_diff", q104SnapshotDiff, Sql(q104Oracle)),
+    Query("q105_temporal_split", q105TemporalSplit, Sql(q105Oracle)),
+    Query("q111_bpe_encode", q111BpeEncode, Sql(q111Oracle)),
+    Query("q112_sparse_allpairs", q112SparseAllPairs, Sql(q112Oracle), core = true),
+    Query("q113_shard_plan", q113ShardPlan, Sql(q113Oracle), core = true),
+    Query("q114_decontam_coverage", q114DecontamCoverage, Sql(q114Oracle)),
+    Query("q115_weighted_sample", q115WeightedSample, Sql(q115Oracle), core = true),
+    Query("q116_export_digest", q116ExportDigest, Sql(q116Oracle)),
+    Query("q117_ccnet_buckets", q117CcnetBuckets, Sql(q117Oracle)),
+    Query("q118_source_digest", q118SourceDigest, Sql(q118Oracle)),
+    Query("q119_column_profile", q119ColumnProfile, Sql(q119Oracle)),
+    Query("q120_curation_pipeline", q120CurationPipeline, Sql(q120Oracle)),
+    Query("q121_de_payload_decode", q121DePayloadDecode, Sql(q121Oracle)),
+    Query("q122_bm25", q122Bm25, Generated(c => q122OracleFor(c.spark, c.dir)), core = true),
+    Query("q123_order_digest", q123OrderDigest, Sql(q123Oracle)),
+    Query("q124_delta_digest", q124DeltaDigest, Sql(q124Oracle)),
+    Query("q125_stratified_shards", q125StratifiedShards, Sql(q125Oracle)),
+    Query("q126_gopher_rules", q126GopherRules, Sql(q126Oracle), core = true),
+    Query("q127_leak_safe_split", q127LeakSafeSplit, Sql(q127Oracle)),
+    Query("q128_train_classifier", q128TrainClassifier, Sql(q128Oracle), core = true),
+    Query("q129_jl_projection", q129JlProjection, Sql(q129Oracle)),
+    Query("q130_jl_ann_recall", q130JlAnnRecall, Sql(q130Oracle)),
+    Query("q131_count_min", q131CountMin, Sql(q131Oracle), core = true),
+    Query("q132_cv_classifier", q132CvClassifier, Sql(q132Oracle)),
+    Query("q133_pmi_collocations", q133PmiCollocations, Sql(q133Oracle)),
+    Query("q134_event_trends", q134EventTrends, Sql(q134Oracle)),
+    Query("q135_deletion_plan", q135DeletionPlan, Sql(q135Oracle)),
+    Query("q136_gopher_report", q136GopherReport, Sql(q136Oracle)),
+    Query("q137_vocab_stats", q137VocabStats, Sql(q137Oracle)),
+    Query("q138_lang_confusion", q138LangConfusion, Sql(q138Oracle)),
+    Query("q139_native_topk", q139NativeTopK, Sql(q139Oracle), core = true),
+    Query("q140_incremental_cc", q140IncrementalCc, Sql(q140Oracle)),
+    Query("q141_ngram_span_dup", q141NgramSpanDup, Sql(q141Oracle)),
+    Query("q142_temperature_mix", q142TemperatureMix, Sql(q142Oracle)),
+    Query("q143_calibration", q143Calibration, Sql(q143Oracle)),
+    Query("q144_token_budget", q144TokenBudget, Sql(q144Oracle)),
+    Query("q145_span_removal", q145SpanRemoval, Sql(q145Oracle)),
+    Query("q146_canonical_dedup", q146CanonicalDedup, Sql(q146Oracle)),
+    Query("q147_cross_source_dup", q147CrossSourceDup, Sql(q147Oracle)),
+    Query("q148_method_agreement", q148MethodAgreement, Sql(q148Oracle)),
+    Query("q324_token_chunks", q324TokenChunks, Sql(q324Oracle))
+  )
 }

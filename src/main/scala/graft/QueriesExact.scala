@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.Oracle.{Generated, Sql}
 
 /** exact-arithmetic laws, sketches, geometry
   *
@@ -4432,4 +4433,73 @@ private[graft] trait QueriesExact {
        |FROM wide, ex, ns""".stripMargin
   }
 
+  // ------------------------------------------------------------ registry
+  /** The queries this family defines. Lazy: an oracle val declared later
+    * in the linearization would be captured as null by a strict val. */
+  lazy val exactQueries: Seq[Query] = Seq(
+    Query("q213_calendar", q213Calendar, Sql(q213Oracle)),
+    Query("q214_frame_semantics", q214FrameSemantics, Sql(q214Oracle)),
+    Query("q215_empty_input", q215EmptyInput, Sql(q215Oracle)),
+    Query("q216_three_valued", q216ThreeValued, Sql(q216Oracle)),
+    Query("q217_interval_union", q217IntervalUnion, Sql(q217Oracle)),
+    Query("q218_longest_streak", q218LongestStreak, Sql(q218Oracle)),
+    Query("q219_asof_tolerance", q219AsofTolerance, Sql(q219Oracle)),
+    Query("q220_topk_ties", q220TopkTies, Sql(q220Oracle)),
+    Query("q221_nested_sampling", q221NestedSampling, Sql(q221Oracle)),
+    Query("q222_equidepth", q222Equidepth, Sql(q222Oracle)),
+    Query("q223_new_vs_returning", q223NewVsReturning, Sql(q223Oracle)),
+    Query("q224_wow_growth", q224WowGrowth, Sql(q224Oracle)),
+    Query("q225_bfs_layers", q225BfsLayers, Sql(q225Oracle)),
+    Query("q226_pii_scan", q226PiiScan, Sql(q226Oracle)),
+    Query("q227_skew_gini", q227SkewGini, Sql(q227Oracle)),
+    Query("q228_negative_sampling", q228NegativeSampling, Sql(q228Oracle)),
+    Query("q229_filter_ablation", q229FilterAblation, Sql(q229Oracle)),
+    Query("q230_ppjoin", q230PpJoin, Sql(q230Oracle)),
+    Query("q231_phrase_search", q231PhraseSearch, Sql(q231Oracle)),
+    Query("q232_merkle_diff", q232MerkleDiff, Sql(q232Oracle)),
+    Query("q233_chi_square_ab", q233ChiSquareAb, Sql(q233Oracle)),
+    Query("q234_survival_hazard", q234SurvivalHazard, Sql(q234Oracle)),
+    Query("q235_eccentricity", q235Eccentricity, Sql(q235Oracle)),
+    Query("q236_sssp", q236Sssp, Sql(q236Oracle)),
+    Query("q237_k_anonymity", q237KAnonymity, Sql(q237Oracle)),
+    Query("q238_seasonality", q238Seasonality, Sql(q238Oracle)),
+    Query("q239_hierarchy_rollup", q239HierarchyRollup, Sql(q239Oracle)),
+    Query("q240_bloom_fpr", q240BloomFpr, Sql(q240Oracle)),
+    Query("q241_lpm_join", q241LpmJoin, Sql(q241Oracle)),
+    Query("q242_token_bucket", q242TokenBucket, Sql(q242Oracle)),
+    Query("q243_market_basket", q243MarketBasket, Sql(q243Oracle)),
+    Query("q244_sliding_distinct", q244SlidingDistinct, Sql(q244Oracle)),
+    Query("q245_gram_matrix", q245GramMatrix, Sql(q245Oracle)),
+    Query("q246_gap_fill", q246GapFill, Sql(q246Oracle)),
+    Query("q247_mix_shift", q247MixShift, Sql(q247Oracle)),
+    Query("q248_maximal_matching", q248MaximalMatching, Sql(q248Oracle)),
+    Query("q249_tokenization", q249Tokenization, Sql(q249Oracle)),
+    Query("q250_abandonment", q250Abandonment, Sql(q250Oracle)),
+    Query("q251_quantile_norm", q251QuantileNorm, Sql(q251Oracle)),
+    Query("q252_seasonal_anomaly", q252SeasonalAnomaly, Sql(q252Oracle)),
+    Query("q253_hits", q253Hits, Sql(q253Oracle)),
+    Query("q254_graph_features", q254GraphFeatures, Sql(q254Oracle)),
+    Query("q255_rrf_fusion", q255Rrf, Generated(c => q255OracleFor(c.spark, c.dir))),
+    Query("q256_cusum", q256Cusum, Sql(q256Oracle)),
+    Query("q257_ewma", q257Ewma, Sql(q257Oracle)),
+    Query("q258_recursive_cte", q258RecursiveCte, Sql(q258Oracle)),
+    Query("q259_variant", q259Variant, Sql(q259Oracle)),
+    Query("q260_collation", q260Collation, Sql(q260Oracle)),
+    Query("q261_jaro_winkler", q261JaroWinkler, Sql(q261Oracle)),
+    Query("q262_inverted_index", q262InvertedIndex, Sql(q262Oracle)),
+    Query("q263_hll_algebra", q263HllAlgebra, Sql(q263Oracle)),
+    Query("q264_ams_f2", q264AmsF2, Sql(q264Oracle)),
+    Query("q266_acf", q266Acf, Sql(q266Oracle)),
+    Query("q267_jump_hash", q267JumpHash, Sql(q267Oracle)),
+    Query("q268_unpivot", q268Unpivot, Sql(q268Oracle)),
+    Query("q270_filter_clause", q270FilterClause, Sql(q270Oracle)),
+    Query("q271_lateral", q271Lateral, Sql(q271Oracle)),
+    Query("q272_theil_sen", q272TheilSen, Sql(q272Oracle)),
+    Query("q273_mann_whitney", q273MannWhitney, Sql(q273Oracle)),
+    Query("q274_bitmap", q274Bitmap, Sql(q274Oracle)),
+    Query("q275_critical_path", q275CriticalPath, Sql(q275Oracle)),
+    Query("q276_set_cover", q276SetCover, Sql(q276Oracle)),
+    Query("q277_scc", q277Scc, Sql(q277Oracle)),
+    Query("q278_cms_join_size", q278CmsJoinSize, Sql(q278Oracle))
+  )
 }

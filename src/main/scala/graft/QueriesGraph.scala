@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.Oracle.{Generated, Sql}
 
 /** graph algorithms & distributional statistics
   *
@@ -3802,6 +3803,65 @@ private[graft] trait QueriesGraph {
       .orderBy(col("anchor"))
   }
 
+  /** q107 replay at corpus size `n`: the full production-shape mining
+    * pipeline — LSH candidates, per-anchor pos/neg argmax, and both
+    * slice audits (exact hardest negative from the slice×corpus pass,
+    * top-1 agreement, candidate-set membership). */
+  def q107OracleFor(n: Long): String = {
+    val (nbits, tables) = Similarity.lshParams(n, targetCosine = 0.4, probeHamming = 1)
+    s"""WITH dbk AS (
+       |${LshSql.dbk(nbits, tables)}
+       |), apb AS (
+       |  SELECT vec_id AS anchor, tbl, unnest([${LshSql.probeList(nbits)}]) AS bucket FROM dbk
+       |), cand AS (
+       |  SELECT DISTINCT a.anchor, b.vec_id AS other
+       |  FROM apb a JOIN dbk b ON a.tbl = b.tbl AND a.bucket = b.bucket
+       |  WHERE a.anchor <> b.vec_id
+       |), sc AS (
+       |  SELECT cand.anchor, va.label AS la, cand.other, vb.label AS lb,
+       |    round(list_cosine_similarity(va.embedding::DOUBLE[], vb.embedding::DOUBLE[]), 6) AS sim
+       |  FROM cand
+       |  JOIN embeddings va ON cand.anchor = va.vec_id
+       |  JOIN embeddings vb ON cand.other = vb.vec_id
+       |), pos AS (
+       |  SELECT anchor, other AS pos_id, sim AS pos_sim,
+       |    row_number() OVER (PARTITION BY anchor ORDER BY sim DESC, other ASC) AS rn
+       |  FROM sc WHERE la = lb
+       |), neg AS (
+       |  SELECT anchor, other AS neg_id, sim AS neg_sim,
+       |    row_number() OVER (PARTITION BY anchor ORDER BY sim DESC, other ASC) AS rn
+       |  FROM sc WHERE la <> lb
+       |), mined AS (
+       |  SELECT p.anchor, p.pos_id, p.pos_sim, n.neg_id, n.neg_sim,
+       |    round(p.pos_sim - n.neg_sim, 6) AS margin
+       |  FROM pos p JOIN neg n ON p.anchor = n.anchor AND p.rn = 1 AND n.rn = 1
+       |), xs AS (
+       |  SELECT a.vec_id AS anchor, b.vec_id AS other,
+       |    round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS sim
+       |  FROM embeddings a JOIN embeddings b
+       |    ON a.vec_id <> b.vec_id AND a.label <> b.label
+       |  WHERE a.vec_id < 500
+       |), xneg AS (
+       |  SELECT anchor, other AS xneg_id FROM (
+       |    SELECT anchor, other,
+       |      row_number() OVER (PARTITION BY anchor ORDER BY sim DESC, other ASC) AS rn
+       |    FROM xs
+       |  ) WHERE rn = 1
+       |), agree AS (
+       |  SELECT round(AVG(CASE WHEN m.neg_id = x.xneg_id THEN CAST(1.0 AS DOUBLE)
+       |    ELSE CAST(0.0 AS DOUBLE) END), 4) AS audit_slice_neg_top1_agree
+       |  FROM xneg x LEFT JOIN mined m ON x.anchor = m.anchor
+       |), incands AS (
+       |  SELECT round(AVG(CASE WHEN c.other IS NOT NULL THEN CAST(1.0 AS DOUBLE)
+       |    ELSE CAST(0.0 AS DOUBLE) END), 4) AS audit_slice_neg_in_cands
+       |  FROM xneg x LEFT JOIN cand c ON x.anchor = c.anchor AND x.xneg_id = c.other
+       |)
+       |SELECT mined.anchor, mined.pos_id, mined.pos_sim, mined.neg_id, mined.neg_sim,
+       |  mined.margin, agree.audit_slice_neg_top1_agree, incands.audit_slice_neg_in_cands
+       |FROM mined, agree, incands
+       |ORDER BY mined.anchor""".stripMargin
+  }
+
   // ---------------------------------------------------------------- q109
   /** IVF-PQ two-stage ANN serving (round 6) — the PRODUCTION vector
     * search stack composed from the proven pieces: an IVF coarse
@@ -4489,4 +4549,60 @@ private[graft] trait QueriesGraph {
        |ORDER BY f.qid""".stripMargin
   }
 
+  // ------------------------------------------------------------ registry
+  /** The queries this family defines. Lazy: an oracle val declared later
+    * in the linearization would be captured as null by a strict val. */
+  lazy val graphQueries: Seq[Query] = Seq(
+    Query("q96_pagerank", q96PageRank, Sql(q96Oracle), core = true),
+    Query("q106_pagerank_directed", q106PagerankDirected, Sql(q106Oracle)),
+    Query("q107_hard_negatives_ann", q107HardNegativesAnn, Generated(c => q107OracleFor(c.embeddingCount))),
+    Query("q109_ivf_pq", q109IvfPq, Generated(c => q109OracleFor(c.spark, c.dir))),
+    Query("q188_benford", q188Benford, Sql(q188Oracle)),
+    Query("q203_idw_interpolation", q203IdwInterpolation, Sql(q203Oracle)),
+    Query("q207_cc_agreement", q207CcAgreement, Sql(q207Oracle)),
+    Query("q265_clustering_coeff", q265ClusteringCoeff, Sql(q265Oracle)),
+    Query("q269_hilbert", q269Hilbert, Sql(q269Oracle)),
+    Query("q279_router_shootout", q279RouterShootout, Sql(q279Oracle)),
+    Query("q280_l1_regression", q280L1Regression, Sql(q280Oracle)),
+    Query("q281_geohash", q281Geohash, Sql(q281Oracle)),
+    Query("q282_markov_stationary", q282MarkovStationary, Sql(q282Oracle)),
+    Query("q283_boruvka_msf", q283BoruvkaMsf, Sql(q283Oracle)),
+    Query("q284_temporal_reach", q284TemporalReach, Sql(q284Oracle)),
+    Query("q285_random_walks", q285RandomWalks, Sql(q285Oracle)),
+    Query("q286_cdc_chunking", q286CdcChunking, Sql(q286Oracle)),
+    Query("q287_point_in_polygon", q287PointInPolygon, Sql(q287Oracle)),
+    Query("q288_link_prediction", q288LinkPrediction, Sql(q288Oracle)),
+    Query("q289_ppr", q289Ppr, Sql(q289Oracle)),
+    Query("q290_allocation", q290Allocation, Sql(q290Oracle)),
+    Query("q291_decision_stump", q291DecisionStump, Sql(q291Oracle)),
+    Query("q292_single_link", q292SingleLink, Sql(q292Oracle)),
+    Query("q293_rake", q293Rake, Sql(q293Oracle)),
+    Query("q294_l_diversity", q294LDiversity, Sql(q294Oracle)),
+    Query("q295_z_range_pruning", q295ZRangePruning, Sql(q295Oracle)),
+    Query("q296_spearman", q296Spearman, Sql(q296Oracle)),
+    Query("q297_morans_i", q297MoransI, Sql(q297Oracle)),
+    Query("q298_robust_outliers", q298RobustOutliers, Sql(q298Oracle)),
+    Query("q299_interval_schedule", q299IntervalSchedule, Sql(q299Oracle)),
+    Query("q300_cuped", q300Cuped, Sql(q300Oracle)),
+    Query("q301_textrank", q301TextRank, Sql(q301Oracle)),
+    Query("q302_absorbing_chain", q302AbsorbingChain, Sql(q302Oracle)),
+    Query("q303_heaps_law", q303HeapsLaw, Sql(q303Oracle)),
+    Query("q304_temperature_mix", q304TemperatureMix, Sql(q304Oracle)),
+    Query("q305_kadane", q305Kadane, Sql(q305Oracle)),
+    Query("q306_source_similarity", q306SourceSimilarity, Sql(q306Oracle)),
+    Query("q307_wilson", q307Wilson, Sql(q307Oracle)),
+    Query("q308_hash_collisions", q308HashCollisions, Sql(q308Oracle)),
+    Query("q309_ref_integrity", q309RefIntegrity, Sql(q309Oracle)),
+    Query("q310_burstiness", q310Burstiness, Sql(q310Oracle)),
+    Query("q311_ta_topk", q311TaTopk, Sql(q311Oracle)),
+    Query("q312_dict_advisor", q312DictAdvisor, Sql(q312Oracle)),
+    Query("q313_conformal", q313Conformal, Sql(q313Oracle)),
+    Query("q314_gini_lorenz", q314GiniLorenz, Sql(q314Oracle)),
+    Query("q315_chao1_richness", q315Chao1, Sql(q315Oracle)),
+    Query("q316_ks_distance", q316KsDistance, Sql(q316Oracle)),
+    Query("q317_mann_whitney", q317MannWhitney, Sql(q317Oracle)),
+    Query("q318_importance_ess", q318ImportanceEss, Sql(q318Oracle)),
+    Query("q319_zipf_slope", q319ZipfSlope, Sql(q319Oracle)),
+    Query("q320_cohens_kappa", q320CohensKappa, Sql(q320Oracle))
+  )
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.jobs.JdbcStore
+import graft.Oracle.Sql
 
 /** S9/S10/S12 EXECUTED: the relational state path run through a real
   * JDBC engine (embedded Derby — it ships on Spark's own classpath), not
@@ -139,4 +140,13 @@ private[graft] trait QueriesJdbc {
     * in the result.
     */
   val q323Oracle: String = q10Oracle
+
+  // ------------------------------------------------------------ registry
+  /** The queries this family defines. Lazy: an oracle val declared later
+    * in the linearization would be captured as null by a strict val. */
+  lazy val jdbcQueries: Seq[Query] = Seq(
+    Query("q321_jdbc_upsert", q321JdbcUpsert, Sql(q321Oracle)),
+    Query("q322_jdbc_cursor", q322JdbcCursor, Sql(q322Oracle)),
+    Query("q323_jdbc_partitioned_scan", q323JdbcPartitionedScan, Sql(q323Oracle))
+  )
 }

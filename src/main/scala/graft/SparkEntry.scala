@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Each `queries` entry re-expresses one operator family from SURVEY.md §2
   * Spark-first; `oracleSql` carries the DuckDB-equivalent ANSI SQL run by
@@ -41,57 +41,50 @@ object SparkEntry {
       .orderBy(col("hour"), col("event_type"))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
+  /** Every registry query, keyed by name; a repeated name fails at first
+    * use. Each family trait declares its own queries once. */
+  lazy val registry: Map[String, Query] = Query.index(
+    Queries.coreQueries ++ Queries.curationQueries ++ Queries.analyticsQueries ++
+      Queries.exactQueries ++ Queries.graphQueries ++ Queries.jdbcQueries)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Queries.oracles
+  /** One entry per implemented operator from SURVEY.md §2. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, q) => name -> q.run }
+
+  /** For each key in queries with a fixed oracle, equivalent ANSI SQL
+    * runnable by DuckDB on the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    registry.collect { case (name, Query(_, _, Oracle.Sql(text), _)) => name -> text }
 
   /** The tagged CORE bench subset (VERDICT r8 task 3): one-or-two
     * representatives per SURVEY §2 operator family and per LLM-pipeline
-    * capability, so an in-round bench loop costs minutes, not the
-    * 224-query ~36 min full run (which remains the round-seal record).
-    * `SPARK_GRAFT_BENCH_ONLY=core` expands to this set; membership is
-    * documented in docs/BENCH_NOTES.md. Every name is validated against
-    * the registry at Bench startup — a renamed query fails loudly.
+    * capability, so an in-round bench loop costs minutes, not the full
+    * run (which remains the round-seal record). Membership is the
+    * `core` flag of each [[Query]]; `SPARK_GRAFT_BENCH_ONLY=core`
+    * expands to this set.
     */
-  val coreBench: Seq[String] = Seq(
-    // ingest/normalize/enrich/dedup/upsert (SURVEY §2.1–2.4)
-    "q2_filter", "q3_enrich", "q4_watermark", "q5_dedup", "q10_upsert",
-    "q19_normalize", "q20_stations",
-    // windows / sessionization / latest-per-key / top-k (§2.5–2.6)
-    "q7_hourly", "q9_topk", "q37_sessionize", "q171_window_functions",
-    // unions / json / explode / strings / joins (§2.7–2.8)
-    "q8_union", "q12_json", "q13_explode", "q42_asof_join",
-    "q50_bloom_join", "q65_salted_join", "q157_range_join",
-    // sketches & custom expressions (§2.10)
-    "q44_hll_sketch", "q59_tdigest", "q131_count_min",
-    // text pipeline: quality/clean/BPE/LM/BM25
-    "q80_dup_spans", "q95_bpe_train", "q110_lm_score", "q122_bm25",
-    "q126_gopher_rules", "q128_train_classifier",
-    // dedup family: exact/minhash/semantic/sparse/decontam
-    "q27_minhash_dedup", "q61_decontaminate", "q78_semantic_dedup",
-    "q112_sparse_allpairs",
-    // ANN family incl. the native operator
-    "q30_ann_lsh", "q35_ivf", "q94_pq_adc", "q103_ann_ranking",
-    "q139_native_topk", "q49_ann_adaptive",
-    // graph family (iterative/checkpointed)
-    "q60_cc_log_rounds", "q96_pagerank", "q155_label_prop",
-    "q174_triangles", "q184_kcore",
-    // export/shard planning, sampling, rank/sweep
-    "q85_hash_split", "q113_shard_plan", "q115_weighted_sample",
-    "q167_peak_concurrency",
-    // ER / spatial / multimodal / IVM
-    "q169_entity_resolution", "q201_geo_grid", "q32_multimodal",
-    "q173_video_keyframes", "q180_ivm"
-  )
+  lazy val coreBench: Seq[String] = registry.values.filter(_.core).map(_.name).toSeq.sorted
 
-  /** Oracles that must be GENERATED against the verify corpus (round
-    * 5): q30/q31/q107 derive LSH geometry from the corpus count at
-    * runtime, so their SQL replay embeds that geometry only once the
-    * count is known. Verify merges these over [[oracleSql]] when
-    * writing oracle_sql.json. */
-  def dynamicOracleSql(spark: SparkSession, sfDir: String): Map[String, String] =
-    Queries.dynamicOracles(spark, sfDir)
+  /** The [[Oracle.Generated]] oracles, generated against the verify
+    * corpus; Verify merges these over [[oracleSql]] when writing
+    * oracle_sql.json. Each generator runs in its own try, so one
+    * failure (e.g. Pq.fit throwing during q94 generation) costs only
+    * that query's oracle, never the whole generated set. NonFatal only:
+    * after an OOM/LinkageError the JVM is compromised, and generating
+    * the rest in it would ship silently-missing oracles attributed to
+    * the wrong cause — fatal errors propagate to Verify's top level.
+    */
+  def dynamicOracleSql(spark: SparkSession, sfDir: String): Map[String, String] = {
+    val corpus = new Oracle.Corpus(spark, sfDir)
+    registry.flatMap {
+      case (name, Query(_, _, Oracle.Generated(gen), _)) =>
+        try Some(name -> gen(corpus))
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[verify] dynamic oracle for $name failed: ${e.getMessage}")
+            None
+        }
+      case _ => None
+    }
+  }
 }

@@ -97,11 +97,12 @@ class BenchRulesSpec extends AnyFunSuite {
 
   private def rec(source: String, nq: Int, subset: Boolean,
                   qs: Map[String, Double],
-                  degraded: Seq[String] = Nil, rerun: Seq[String] = Nil): String = {
+                  degraded: Seq[String] = Nil, rerun: Seq[String] = Nil,
+                  nproc: Int = 32): String = {
     val qsj = qs.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val dj = degraded.map("\"" + _ + "\"").mkString("[", ",", "]")
     val rj = rerun.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":1.0,"unit":"sec","queries":$qsj,"sf":"x","source":"$source","nq":$nq,"subset":$subset,"degraded":$dj,"rerun":$rj}"""
+    s"""{"metric":"total","value":1.0,"unit":"sec","queries":$qsj,"sf":"x","source":"$source","nq":$nq,"subset":$subset,"degraded":$dj,"rerun":$rj,"nproc":$nproc}"""
   }
 
   test("parseRecordQueries drops degraded-without-rerun, keeps rerun-adjudicated") {
@@ -122,7 +123,7 @@ class BenchRulesSpec extends AnyFunSuite {
       rec("driver", 324, subset = false, Map("q1_a" -> 4.23, "q2_b" -> 0.5))
     )
     java.nio.file.Files.writeString(f, lines.mkString("\n") + "\n")
-    val m = BenchRules.loadPriorDriver(f.toString)
+    val m = BenchRules.loadPriorDriver(f.toString, nproc = 32)
     assert(m == Map("q1_a" -> 4.23, "q2_b" -> 0.5))
     java.nio.file.Files.delete(f)
   }
@@ -134,9 +135,28 @@ class BenchRulesSpec extends AnyFunSuite {
   test("the shipped bench_records.jsonl yields the r13 binding record") {
     // Guards the parser against drift in the real record format: the
     // prior driver record must contain q96 at a plausible settled value.
-    val m = BenchRules.loadPriorDriver("/root/repo/bench_records.jsonl")
+    val m = BenchRules.loadPriorDriver("bench_records.jsonl", nproc = 32)
     assert(m.contains("q96_pagerank"))
     assert(m.size > 300)
+  }
+
+  test("loadPriorDriver binds only a record taken at the same nproc") {
+    // a 4-core run must not compare against the 32-core adee08c-era
+    // records: shuffle width tracks cores, so about half the core subset
+    // re-ran as false spikes
+    val f = java.nio.file.Files.createTempFile("bench_records", ".jsonl")
+    val lines = Seq(
+      rec("driver", 324, subset = false, Map("q1_a" -> 2.0), nproc = 4),
+      rec("driver", 324, subset = false, Map("q1_a" -> 0.7), nproc = 32),
+      rec("driver", 324, subset = false, Map("q1_a" -> 0.5)).replace(",\"nproc\":32", "")
+    )
+    java.nio.file.Files.writeString(f, lines.mkString("\n") + "\n")
+    assert(BenchRules.loadPriorDriver(f.toString, nproc = 4) == Map("q1_a" -> 2.0))
+    assert(BenchRules.loadPriorDriver(f.toString, nproc = 32) == Map("q1_a" -> 0.7))
+    assert(BenchRules.loadPriorDriver(f.toString, nproc = 8).isEmpty)
+    java.nio.file.Files.delete(f)
+    // every shipped full driver record is a 32-core one
+    assert(BenchRules.loadPriorDriver("bench_records.jsonl", nproc = 4).isEmpty)
   }
 
   // ------------------------------------------------------ jit sampler
